@@ -229,6 +229,10 @@ def main() -> None:
         import contextlib
         import io
 
+        if explain_key not in frames:
+            spark.stop()
+            raise SystemExit(f"unknown --explain key {explain_key!r}; "
+                             f"known keys: {', '.join(frames)}")
         built = frames[explain_key]()
         parts = built if isinstance(built, tuple) else (built,)
         chunks = []
@@ -239,7 +243,8 @@ def main() -> None:
             chunks.append(f"-- output {i}:\n" + buf.getvalue())
         text = "\n\n".join(chunks)
         if out:
-            os.makedirs(os.path.dirname(out), exist_ok=True)
+            if os.path.dirname(out):
+                os.makedirs(os.path.dirname(out), exist_ok=True)
             with open(out, "w") as f:
                 f.write(text)
             print(f"wrote {out}")

@@ -12,15 +12,15 @@ constant factor while having the same shuffle profile per round.
 
 from __future__ import annotations
 
-import contextlib
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import scoped_conf
+# symmetric edge rows per loop partition — see connected_components
+_LOOP_ROWS_PER_PARTITION = 128 * 1024
 
 
 def connected_components(
@@ -30,8 +30,6 @@ def connected_components(
     max_iter: int = 25,
     durable: bool = False,
     pointer_jump: bool = False,
-    aqe_min_partition_size: str | None = "1m",
-    loop_rows_per_partition: int | None = 128 * 1024,
     broadcast_label_limit: int = 100_000,
 ) -> DataFrame:
     """edges(src, dst) undirected -> (node, component) with component =
@@ -45,31 +43,26 @@ def connected_components(
     for cluster jobs where a lost executor would otherwise restart the
     whole iteration history.
 
-    ``aqe_min_partition_size``: the session-wide AQE coalesce floor
-    (``session.py`` pins ``minPartitionSize=64k`` for the CPU-dense
-    Python-stage family) is exactly wrong for this loop — iterations
-    are shuffle-light and scheduling-bound, so byte-thin rounds want
-    FEWER coalesced partitions, not more (VERDICT r7 finding 1: the
-    floor cost full CC +11-16%). Every action of the iteration runs
-    inside this function, so the floor is set/restored around the loop
-    (default: Spark's own 1m default; ``None`` = inherit the session
-    value). At real cluster scale per-round shuffles are orders past
-    either floor, so the override only matters where it helps.
-
-    ``loop_rows_per_partition``: the loop's shuffle-partition count is
-    DERIVED from the materialized symmetric edge table —
-    ``ceil(|sym| / loop_rows_per_partition)``, clamped to the session
-    ``spark.sql.shuffle.partitions`` — instead of inheriting a session
-    constant sized for corpus-scale stages (guide §2: derive
+    Loop partitioning is DERIVED from the materialized symmetric edge
+    table — ``ceil(|sym| / _LOOP_ROWS_PER_PARTITION)``, clamped to the
+    session ``spark.sql.shuffle.partitions`` — instead of inheriting a
+    session constant sized for corpus-scale stages (guide §2: derive
     partitioning from input size, never a local[N] constant). Iterative
     CC rounds are scheduling-bound: at 500k nodes / 884k sym rows the
     r8 sweep measured 32 session partitions = 9.8s, AQE-1m-floor =
     6.4s, 8 derived partitions = 4.5s (min-of-3 each), with a shallow
     optimum at ~1e5 rows/task; on big graphs the clamp saturates to the
     session value, so the rule only ever REMOVES scheduling overhead.
-    The row count rides the edge-materialization job as an
-    ``Observation`` metric (no extra action). ``None`` disables the
-    derivation.
+    The count is applied operator-locally, as a ``coalesce`` on the two
+    frames the loop materializes (the label seed and each round's
+    labels) — never by setting session confs, which would leak into
+    queries other threads plan on the same session. ``coalesce``, not
+    ``repartition(n, "node")``: a hash exchange under the round's
+    ``groupBy("node")`` would satisfy its distribution and drop the
+    map-side min-combine, so a dense graph would shuffle every edge
+    every round instead of ~|V| rows per map task. The row count rides
+    the edge-materialization job as an ``Observation`` metric (no extra
+    action).
 
     ``broadcast_label_limit``: while the node count stays at or under
     this many rows, each round's label join carries an ``F.broadcast``
@@ -126,18 +119,7 @@ def connected_components(
     def cut(df: DataFrame) -> DataFrame:
         return df.checkpoint() if durable else df.localCheckpoint()
 
-    spark = edges.sparkSession
-    # ExitStack (closed in the finally) keeps the loop body at its
-    # original indentation; both conf scopes restore on every path
-    scope = contextlib.ExitStack()
-    if aqe_min_partition_size is not None:
-        scope.enter_context(scoped_conf(spark, {
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-                aqe_min_partition_size,
-        }))
     try:
-        from pyspark.sql import Observation
-
         # row counts for the partition derivation and the broadcast
         # decision ride the cut jobs as Observation metrics — zero
         # extra actions (a separate count per decision measurably taxed
@@ -151,24 +133,19 @@ def connected_components(
             .distinct()
             .observe(sym_obs, F.count(F.lit(1)).alias("n"))
         )
-
-        if loop_rows_per_partition is not None:
-            n_sym = sym_obs.get["n"]
-            session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            loop_parts = max(
-                1,
-                min(session_parts, -(-n_sym // loop_rows_per_partition)),
-            )
-            if loop_parts < session_parts:
-                scope.enter_context(scoped_conf(spark, {
-                    "spark.sql.shuffle.partitions": str(loop_parts),
-                }))
+        session_parts = int(
+            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
+        loop_parts = max(1, min(
+            session_parts, -(-sym_obs.get["n"] // _LOOP_ROWS_PER_PARTITION)
+        ))
 
         lab_obs = Observation()
         labels = cut(
             sym.select(F.col("a").alias("node"))
             .distinct()
             .withColumn("component", F.col("node"))
+            .coalesce(loop_parts)
             .observe(lab_obs, F.count(F.lit(1)).alias("n"))
         )
         # the node set is loop-invariant, so one metric decides the
@@ -230,11 +207,9 @@ def connected_components(
             # that materializes the round's checkpoint — the pre-r8
             # shape paid a separate (cheap but scheduler-round-trip)
             # count job per round over the materialized blocks
-            from pyspark.sql import Observation
-
             obs = Observation()
             new_labels = cut(
-                propagated.observe(
+                propagated.coalesce(loop_parts).observe(
                     obs,
                     F.sum(
                         F.when(F.col("component") != F.col("_prev"), 1)
@@ -257,8 +232,6 @@ def connected_components(
         if cleanup_dir is not None:
             shutil.rmtree(cleanup_dir, ignore_errors=True)
         raise
-    finally:
-        scope.close()
 
 
 def _local_components(edge_rows) -> list:

@@ -20,10 +20,11 @@ plan linear:
   canonical set: signature pipeline + anti-join spine; decontaminate's
   corpus: n-gram probe + id spine) get a LAZY ``localCheckpoint``
   boundary, so the subtree materializes once at first action and every
-  further reference reads blocks instead of recomputing. At a real
-  100 TB run the same boundary is a TableIO snapshot write
-  (scripts/run_dataprep.py does that between stages); localCheckpoint
-  is the single-job, no-external-storage analog.
+  further reference reads blocks instead of recomputing.
+  (scripts/run_dataprep.py does not call ``curate``: it runs the stages
+  one by one with join-backs, ``.cache()``s the dedup result and runs a
+  ``count()`` per stage for its survivor metrics; it writes no snapshot
+  between stages.)
 
 Result: the composed job scans the source exactly twice (both inside
 dedup: the exact-keep aggregation and the canonical build) regardless
@@ -59,7 +60,6 @@ def curate(
     n_bands: int = 4,
     rows_per_band: int = 2,
     max_bucket: int | None = 10_000,
-    vectorized: bool = True,
     observation=None,
 ) -> DataFrame:
     """(line-level boilerplate removal) -> dedup -> (decontaminate) ->
@@ -86,8 +86,8 @@ def curate(
         )
     out = dedup_pipeline(
         docs, n_bands, rows_per_band, id_col, text_col,
-        max_bucket=max_bucket, vectorized=vectorized,
-        observation=observation, checkpoint=True,
+        max_bucket=max_bucket, observation=observation,
+        checkpoint=True,
     )
     if eval_docs is not None:
         # boundary: the dedup result feeds decontaminate's n-gram probe

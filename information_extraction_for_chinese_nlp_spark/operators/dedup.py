@@ -39,7 +39,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 def dedup_pipeline(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
                    id_col: str = "doc_id", text_col: str = "text",
                    max_bucket: int | None = 10_000,
-                   vectorized: bool = True,
                    observation=None,
                    checkpoint: bool = False) -> DataFrame:
     """The standard 100 TB dedup recipe as ONE composed plan:
@@ -72,8 +71,7 @@ def dedup_pipeline(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
         canonical = canonical.localCheckpoint(eager=False)
     pairs = minhash_lsh_pairs(
         canonical, n_bands, rows_per_band, id_col, text_col,
-        max_bucket=max_bucket, vectorized=vectorized,
-        observation=observation,
+        max_bucket=max_bucket, observation=observation,
     )
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     losers = comp.filter(F.col("node") != F.col("component")).select(

@@ -1,16 +1,25 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory: the one owner of the engine's session confs.
 
-Defaults are chosen for the 100 TB design point and work unchanged on
-local[N]: AQE on (runtime coalesce + skew-join splitting), Arrow enabled
-for every pandas UDF boundary, shuffle partitions sized by the
-environment, and broadcast threshold left to Spark (we additionally hint
-explicitly where a side is known-small).
+``get_spark`` applies two groups of settings:
+
+- **Engine conf**, always: AQE (runtime coalesce with a 64k floor +
+  skew-join splitting), the ``InferFiltersFromGenerate`` exclusion,
+  shuffled-hash-join preference, Arrow for every pandas UDF boundary
+  with its batch size, and the UTC session timezone. These are
+  cluster-size agnostic, so every entry point — tests, bench, the
+  spark-submit CLIs — plans under the same rules.
+- **Local topology**, only when a ``master`` is passed: the master
+  itself, the default shuffle-partition count, driver memory and the
+  UI. Under spark-submit pass no master; the submit command owns the
+  topology.
+
+Operators never set session confs: a conf set mid-run is session-global
+and leaks into any query another thread plans on the same session.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -19,52 +28,22 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-@contextmanager
-def scoped_conf(spark: SparkSession, settings: dict[str, str]):
-    """Temporarily override session confs for a driver-side loop whose
-    actions all run inside the ``with`` block, restoring (or unsetting)
-    the previous values on exit.
-
-    Session confs are SESSION-global, so the override leaks into any
-    query another thread starts inside the window — the same caveat the
-    session-wide AQE floor already carries. Use for iterative operators
-    (CC, PageRank) whose per-round shuffles want different AQE
-    coalescing than the Python-stage-bound extraction family; the
-    returned frames must be materialized (checkpointed) inside the
-    scope or they will execute under the restored confs."""
-    conf = spark.conf
-    prev: dict[str, str | None] = {}
-    for k, v in settings.items():
-        prev[k] = conf.get(k, None)
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                conf.unset(k)
-            else:
-                conf.set(k, old)
-
-
 def get_spark(
     app_name: str = "ie-kg-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession with engine defaults.
+    """Build (or get) a SparkSession with the engine conf.
 
-    On a real cluster, pass ``master=None`` and let spark-submit own the
-    master / executor topology; everything here is cluster-size agnostic.
+    ``master="local[N]"`` also sizes a local session (shuffle partitions
+    default to ``max(SPARK_GRAFT_CPUS, 8)``). ``master=None`` — the
+    spark-submit case — leaves master, executor topology and shuffle
+    partitions to the submit command unless ``shuffle_partitions`` is
+    given explicitly.
     """
-    cpus = default_parallelism()
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         # AQE: runtime partition coalescing + skew-join splitting. At 100 TB
         # the static shuffle-partition count is always wrong somewhere; AQE
         # re-plans from actual map output sizes.
@@ -77,10 +56,10 @@ def get_spark(
         # interleaved A/B (r7, min-of-4/cell, sf0.1): 64k floor wins the
         # Python-stage-bound keys big (q2c 5.22->2.09s, q4c 4.90->1.93s,
         # q1 1.68->1.38s, q8 10.02->8.54s); the one payer is iterative
-        # full CC (q10 10.39->11.56s, shuffle-light tiny iterations x
-        # more tasks). An explicit repartition(32) matched the q1 gain
-        # but costs an extra Exchange at scale. Coalescing can only
-        # shrink below shuffle.partitions, so the worst case stays
+        # full CC, which bounds its own loop partitions by coalescing
+        # (operators/components.py). An explicit repartition(32) matched
+        # the q1 gain but costs an extra Exchange at scale. Coalescing can
+        # only shrink below shuffle.partitions, so the worst case stays
         # bounded at `shuffle_partitions` tasks — and at real 100 TB
         # partition sizes the floor is never the binding constraint.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
@@ -113,26 +92,36 @@ def get_spark(
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for pandas UDF / mapInPandas boundaries (the scorer).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # Deterministic session timezone so ts math is stable everywhere.
         .config("spark.sql.session.timeZone", "UTC")
-        # normalized: the conf is strictly boolean — a raw SPARK_UI=1
-        # would crash getOrCreate with IllegalArgumentException
-        .config(
-            "spark.ui.enabled",
-            str(
-                os.environ.get("SPARK_UI", "false").strip().lower()
-                in ("1", "true", "yes", "on")
-            ).lower(),
-        )
-        # local mode puts every reducer's collect_list buffer in one heap;
-        # an undersized heap turns the assembly stage into GC thrash
-        # (measured: 3-5x wall-time outliers at local[32] with 8g).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
+    if master is not None:
+        shuffle_partitions = shuffle_partitions or max(default_parallelism(), 8)
+        builder = (
+            builder.master(master)
+            # normalized: the conf is strictly boolean — a raw SPARK_UI=1
+            # would crash getOrCreate with IllegalArgumentException
+            .config(
+                "spark.ui.enabled",
+                str(
+                    os.environ.get("SPARK_UI", "false").strip().lower()
+                    in ("1", "true", "yes", "on")
+                ).lower(),
+            )
+            # local mode puts every reducer's collect_list buffer in one
+            # heap; an undersized heap turns the assembly stage into GC
+            # thrash (measured: 3-5x wall-time outliers at local[32] with 8g).
+            .config(
+                "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g")
+            )
+        )
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -45,12 +45,15 @@ def main() -> None:
     from information_extraction_for_chinese_nlp_spark.plans.pipeline import (
         extract_triples,
     )
-    from information_extraction_for_chinese_nlp_spark.session import get_spark
+    from information_extraction_for_chinese_nlp_spark.session import (
+        default_parallelism,
+        get_spark,
+    )
     from information_extraction_for_chinese_nlp_spark.sources.transcripts import (
         synth_transcripts,
     )
 
-    spark = get_spark("evaluate")
+    spark = get_spark("evaluate", master=f"local[{default_parallelism()}]")
     transcripts = synth_transcripts(spark, n_convs=args.n_convs).cache()
 
     pred = extract_triples(transcripts, max_seq_len=args.max_seq_len).select(

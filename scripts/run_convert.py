@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> dict:
                     help="one output file per split (small exports only)")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from information_extraction_for_chinese_nlp_spark import ENTITY_TYPES
@@ -58,17 +57,13 @@ def main(argv: list[str] | None = None) -> dict:
         split_hash,
         to_model_input,
     )
+    from information_extraction_for_chinese_nlp_spark.session import get_spark
     from information_extraction_for_chinese_nlp_spark.sources.catalog import (
         read_json_arrays,
         write_jsonl,
     )
 
-    spark = (
-        SparkSession.builder.appName("ie-convert")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("ie-convert")
     prompts = args.prompts or list(ENTITY_TYPES)
 
     raw = read_json_arrays(spark, args.labelstudio_file)

@@ -6,7 +6,7 @@ the 100 TB corpus-prep recipe as one CLI:
       scripts/run_dataprep.py \
       --input docs.parquet --save-dir /path/out \
       [--dedup pipeline|exact|none] [--n-bands 4] [--rows-per-band 2] \
-      [--max-bucket 10000] [--vectorized] \
+      [--max-bucket 10000] \
       [--decontaminate eval.parquet] [--decontam-ngram 13] \
       [--min-quality 0.3] [--scrub-pii] \
       [--sample en=0.25,zh=1.0] [--strata-col lang] [--default-fraction 0.0] \
@@ -50,11 +50,6 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--rows-per-band", type=int, default=2)
     ap.add_argument("--max-bucket", type=int, default=10_000,
                     help="degenerate-cluster cap for LSH banding; -1 = no cap")
-    ap.add_argument("--vectorized", action=argparse.BooleanOptionalAction,
-                    default=True,
-                    help="mapInPandas signature path (default since r8 — "
-                         "measured faster at every band budget; "
-                         "--no-vectorized keeps the pure-Catalyst twin)")
     ap.add_argument("--decontaminate", default=None,
                     help="eval-corpus parquet; drop docs sharing any n-gram")
     ap.add_argument("--decontam-ngram", type=int, default=13)
@@ -76,7 +71,7 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--coalesce", action="store_true")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from information_extraction_for_chinese_nlp_spark.operators.convert import (
@@ -92,13 +87,9 @@ def main(argv: list[str] | None = None) -> dict:
         quality_features,
         scrub_pii,
     )
+    from information_extraction_for_chinese_nlp_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("ie-dataprep")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("ie-dataprep")
     docs = spark.read.parquet(args.input)
     metrics: dict = {"n_in": docs.count()}
     id_col, text_col = args.id_col, args.text_col
@@ -118,7 +109,6 @@ def main(argv: list[str] | None = None) -> dict:
             docs, n_bands=args.n_bands, rows_per_band=args.rows_per_band,
             id_col=id_col, text_col=text_col,
             max_bucket=None if args.max_bucket < 0 else args.max_bucket,
-            vectorized=args.vectorized,
             observation=obs,
         )
     elif args.dedup == "exact":

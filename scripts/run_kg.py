@@ -58,7 +58,7 @@ def main(argv: list[str] | None = None) -> dict:
                     help="PageRank iterations over the subject<->entity graph")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from information_extraction_for_chinese_nlp_spark.operators.fusion import (
         resolve_functional,
@@ -69,16 +69,12 @@ def main(argv: list[str] | None = None) -> dict:
     from information_extraction_for_chinese_nlp_spark.plans.pipeline import (
         extract_triples,
     )
+    from information_extraction_for_chinese_nlp_spark.session import get_spark
     from information_extraction_for_chinese_nlp_spark.sources.transcripts import (
         synth_transcripts,
     )
 
-    spark = (
-        SparkSession.builder.appName("ie-kg-construct")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("ie-kg-construct")
     if args.synth_convs:
         transcripts = synth_transcripts(spark, n_convs=args.synth_convs)
     elif args.input:

@@ -37,12 +37,11 @@ def main() -> None:
     ap.add_argument("--threshold", type=float, default=0.5)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from information_extraction_for_chinese_nlp_spark.plans.graph import build_graph
     from information_extraction_for_chinese_nlp_spark.plans.pipeline import (
         extract_triples,
     )
+    from information_extraction_for_chinese_nlp_spark.session import get_spark
     from information_extraction_for_chinese_nlp_spark.sources.catalog import TableIO
     from information_extraction_for_chinese_nlp_spark.sources.checkpoint import (
         ResumableRunner,
@@ -51,15 +50,8 @@ def main() -> None:
         synth_transcripts,
     )
 
-    # spark-submit owns master/executor topology; only app-level conf here.
-    spark = (
-        SparkSession.builder.appName("ie-kg-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    # spark-submit owns master/executor topology; get_spark adds engine conf
+    spark = get_spark("ie-kg-pipeline")
 
     if args.synth_convs:
         transcripts = synth_transcripts(spark, n_convs=args.synth_convs)
